@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,39 +8,46 @@ import graft.operators.{GoldDims, GoldFacts, SilverTransforms}
 import graft.quality.Checks
 import graft.sources.{Ingest, Tables}
 
-/** Topological stage runner — the in-process equivalent of the reference's
+/** Concurrent stage runner — the in-process equivalent of the reference's
   * Databricks Workflows DAG (`databricks.yml:69-205`: 4 bronze → 4 silver
-  * → gold → DQ gate), with tables as the only handoff between stages
-  * (SURVEY §3.4).
+  * → gold → DQ gate, each layer's tasks side by side), with tables as the
+  * only handoff between stages (SURVEY §3.4).
   */
 object Runner {
 
   final case class Stage(name: String, deps: Seq[String], run: SparkSession => Unit)
   final case class StageResult(name: String, ok: Boolean, seconds: Double, error: Option[String])
 
-  /** Run stages in dependency order; a failed stage skips its
-    * descendants (fail-fast per subtree, like Workflows). */
+  /** Run each stage concurrently with the others, as soon as all its
+    * dependencies have finished ([[TaskGraph]], one thread per stage); a
+    * failed stage skips its descendants only, while independent subtrees
+    * still run (fail-fast per subtree, like Workflows). Results come back
+    * in input order. Each stage's Spark jobs carry the stage name as job
+    * description and a `stage:<name>` job tag, so listeners and the UI
+    * charge them to the right stage while stages overlap. */
   def run(spark: SparkSession, stages: Seq[Stage]): Seq[StageResult] = {
-    val byName = stages.map(s => s.name -> s).toMap
-    require(byName.size == stages.size, "duplicate stage names")
+    val index = stages.map(_.name).zipWithIndex.toMap
+    require(index.size == stages.size, "duplicate stage names")
     stages.foreach(s => s.deps.foreach(d =>
-      require(byName.contains(d), s"stage ${s.name} depends on unknown stage $d")))
-    val done = mutable.Map[String, StageResult]()
-    def exec(name: String): StageResult = done.getOrElseUpdate(name, {
-      val st = byName(name)
-      val depResults = st.deps.map(exec)
-      if (depResults.exists(!_.ok))
-        StageResult(name, ok = false, 0.0, Some("skipped: upstream failure"))
-      else {
-        val t0 = System.nanoTime()
-        try { st.run(spark); StageResult(name, ok = true, (System.nanoTime() - t0) / 1e9, None) }
-        catch { case e: Throwable =>
-          StageResult(name, ok = false, (System.nanoTime() - t0) / 1e9,
-            Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-        }
-      }
+      require(index.contains(d), s"stage ${s.name} depends on unknown stage $d")))
+    val sc = spark.sparkContext
+    TaskGraph.run(sc, stages.toIndexedSeq.map { st =>
+      TaskGraph.Task[StageResult](st.deps.map(index), upstream =>
+        if (upstream.exists(!_.ok))
+          StageResult(st.name, ok = false, 0.0, Some("skipped: upstream failure"))
+        else {
+          val t0 = System.nanoTime()
+          try {
+            sc.setJobDescription(st.name)
+            sc.addJobTag(s"stage:${st.name}")
+            st.run(spark)
+            StageResult(st.name, ok = true, (System.nanoTime() - t0) / 1e9, None)
+          } catch { case e: Throwable =>
+            StageResult(st.name, ok = false, (System.nanoTime() - t0) / 1e9,
+              Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+          }
+        })
     })
-    stages.map(s => exec(s.name))
   }
 
   /** The full medallion pipeline over a directory of raw CSVs

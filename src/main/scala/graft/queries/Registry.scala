@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.pipeline.TaskGraph
+
 /** One driver-gradable query: a Spark implementation plus (usually) an
   * equivalent DuckDB oracle SQL over the same parquet tables.
   *
@@ -93,18 +95,16 @@ object Registry {
     * jobs at once inside one application — the multimodal gates' chains
     * were sequential only because each ends in an eager
     * `localCheckpoint` and the driver called them one after another.
-    * Each thunk runs in its own thread (job descriptions/groups are
-    * thread-local, so labeling stays correct); the call returns when
-    * every thunk has finished, preserving order. Determinism is
-    * untouched — each chain's result is a pure function of its input,
-    * only the materialization overlaps. */
-  def inParallel[A](fs: (() => A)*): IndexedSeq[A] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futs = fs.toIndexedSeq.map(f => Future(f()))
-    futs.map(Await.result(_, Duration.Inf))
-  }
+    * The thunks run on [[graft.pipeline.TaskGraph]] for the active
+    * session's SparkContext: a pool of their own, the caller's job group,
+    * description and tags on every thunk's jobs, and the first failure
+    * (fatal errors included) rethrown to the caller after the other
+    * thunks' running jobs are cancelled. Results come back in input
+    * order. Determinism is untouched — each chain's result is a pure
+    * function of its input, only the materialization overlaps. */
+  def inParallel[A](fs: (() => A)*): IndexedSeq[A] =
+    TaskGraph.run(SparkSession.active.sparkContext,
+      fs.toIndexedSeq.map(f => TaskGraph.Task[A](Nil, _ => f())))
 
   /** Cast every DECIMAL column of a terminal gate projection to DOUBLE.
     *

@@ -1,12 +1,20 @@
 package graft
 
 import java.nio.file.Files
+import java.util.Properties
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbus.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
 import graft.pipeline.Runner
-import graft.sources.{Ingest, Tables}
+import graft.sources.{Ingest, SampleDataGen, Tables}
+import graft.validation.TableDiff
 
 /** Bronze ingestion (batch + streaming exactly-once), write paths, and
   * the end-to-end medallion runner on generated sample CSVs. */
@@ -297,5 +305,127 @@ class IngestRunnerSpec extends SparkTestBase {
     assert(spark.read.table(s"$db.fact_claims").count() === 2)
     assert(spark.read.table(s"$db.fact_premiums").count() === 2)
     assert(spark.read.table(s"$db.dim_date").count() === 4018) // 2020-01-01..2030-12-31
+  }
+
+  /** A stage that counts down `other`, then waits at most 20 s for
+    * `mine`: two of them finish only when they run at the same time. */
+  private def meet(mine: CountDownLatch, other: CountDownLatch): SparkSession => Unit = _ => {
+    other.countDown()
+    require(mine.await(20, TimeUnit.SECONDS), "the other stage did not run alongside")
+  }
+
+  test("runner runs dependency-free stages at the same time") {
+    val (a, b) = (new CountDownLatch(1), new CountDownLatch(1))
+    val results = Runner.run(spark, Seq(
+      Runner.Stage("left", Nil, meet(a, b)),
+      Runner.Stage("right", Nil, meet(b, a))))
+    assert(results.forall(_.ok), results)
+  }
+
+  test("runner starts no stage before all its dependencies have finished") {
+    val log = new ConcurrentLinkedQueue[String]()
+    def stage(name: String, deps: Seq[String], ms: Long) = Runner.Stage(name, deps, _ => {
+      log.add(s"start:$name")
+      Thread.sleep(ms)
+      log.add(s"end:$name")
+    })
+    val stages = Seq(stage("a", Nil, 300), stage("b", Nil, 20), stage("c", Seq("a", "b"), 10),
+      stage("d", Seq("b"), 150), stage("e", Seq("c", "d"), 10), stage("f", Seq("b"), 0))
+    assert(Runner.run(spark, stages).forall(_.ok))
+    val order = log.asScala.toIndexedSeq
+    for (s <- stages; d <- s.deps)
+      assert(order.indexOf(s"end:$d") < order.indexOf(s"start:${s.name}"),
+        s"${s.name} started before $d finished: $order")
+  }
+
+  test("runner failure skips only its descendants; a sibling subtree completes") {
+    val stages = Seq(
+      Runner.Stage("bad", Nil, _ => throw new RuntimeException("boom")),
+      Runner.Stage("bad_child", Seq("bad"), _ => ()),
+      Runner.Stage("bad_grandchild", Seq("bad_child"), _ => ()),
+      Runner.Stage("good", Nil, _ => Thread.sleep(200)),
+      Runner.Stage("good_child", Seq("good"), _ => Thread.sleep(50)))
+    val r = Runner.run(spark, stages).map(x => x.name -> x).toMap
+    assert(r("good").ok && r("good_child").ok)
+    assert(!r("bad").ok && r("bad").error.get.contains("boom"))
+    Seq("bad_child", "bad_grandchild").foreach(n =>
+      assert(!r(n).ok && r(n).error.get.contains("skipped"), r(n)))
+  }
+
+  test("runner returns results in input order, not completion order") {
+    val stages = Seq(
+      Runner.Stage("z", Seq("y"), _ => ()),
+      Runner.Stage("slow", Nil, _ => Thread.sleep(300)),
+      Runner.Stage("y", Seq("x"), _ => ()),
+      Runner.Stage("x", Nil, _ => Thread.sleep(50)),
+      Runner.Stage("fast", Nil, _ => ()))
+    assert(Runner.run(spark, stages).map(_.name) === stages.map(_.name))
+  }
+
+  test("runner rejects a dependency cycle before running any stage") {
+    var ran = false
+    val err = intercept[IllegalArgumentException](Runner.run(spark, Seq(
+      Runner.Stage("free", Nil, _ => ran = true),
+      Runner.Stage("a", Seq("b"), _ => ()),
+      Runner.Stage("b", Seq("a"), _ => ()))))
+    assert(err.getMessage.contains("cycle") && !ran)
+  }
+
+  test("runner labels every job with its own stage's description and tag") {
+    val sc = spark.sparkContext
+    val started = new ConcurrentLinkedQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.properties)
+    }
+    val (a, b) = (new CountDownLatch(1), new CountDownLatch(1))
+    // Each stage marks its own jobs, then meets the other so both run
+    // their jobs while the other is running.
+    def stage(name: String, mine: CountDownLatch, other: CountDownLatch) =
+      Runner.Stage(name, Nil, s => {
+        s.sparkContext.setLocalProperty("graft.test.owner", name)
+        meet(mine, other)(s)
+        s.range(100).count()
+        s.range(50).selectExpr("sum(id)").collect()
+      })
+    sc.addSparkListener(listener)
+    try {
+      val results = Runner.run(spark, Seq(stage("left", a, b), stage("right", b, a)))
+      assert(results.forall(_.ok), results)
+      ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val jobs = started.asScala.toSeq
+    assert(jobs.map(_.getProperty("graft.test.owner")).toSet === Set("left", "right"))
+    jobs.foreach { p =>
+      val owner = p.getProperty("graft.test.owner")
+      val stageTags = p.getProperty("spark.job.tags").split(",").filter(_.startsWith("stage:"))
+      assert(stageTags.toSeq === Seq(s"stage:$owner"))
+      assert(p.getProperty("spark.job.description") === owner)
+    }
+  }
+
+  test("concurrent medallion run builds the same gold tables as a serial replay") {
+    val dir = Files.createTempDirectory("graft_gold_eq").toString
+    SampleDataGen.generate(dir, 200, seed = 7L)
+    val (concurrent, serial) = ("graft_gold_concurrent", "graft_gold_serial")
+    Seq(concurrent, serial).foreach(db => spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE"))
+    val results = Runner.run(spark, Runner.medallionStages(dir, concurrent))
+    assert(results.forall(_.ok), results.filterNot(_.ok))
+    // Serial replay: every stage's body, one at a time, dependencies first.
+    val stages = Runner.medallionStages(dir, serial)
+    val byName = stages.map(s => s.name -> s).toMap
+    val replayed = scala.collection.mutable.Set.empty[String]
+    def replay(st: Runner.Stage): Unit = if (!replayed(st.name)) {
+      st.deps.foreach(d => replay(byName(d)))
+      st.run(spark)
+      replayed += st.name
+    }
+    stages.foreach(replay)
+    Seq("dim_policy", "dim_property", "dim_coverage", "dim_date", "fact_claims",
+      "fact_premiums").foreach { g =>
+      val (c, s) = (spark.read.table(s"$concurrent.$g"), spark.read.table(s"$serial.$g"))
+      assert(c.count() > 0, s"$g is empty")
+      val diff = TableDiff.summarize(c, s, c.columns.toSeq.filterNot(_.startsWith("_")))
+      assert(diff.equal, s"$g: $diff")
+    }
   }
 }

@@ -1,9 +1,28 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, ExecutionException, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.graftbus.ListenerBusDrain
+import org.apache.spark.scheduler.{JobFailed, JobResult, SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.queries.Registry
+
+/** Task body for the cancellation spec: holds its executor slot until
+  * Spark kills the task, or for at most `maxMillis`. */
+object HoldUntilKilled {
+  def apply(maxMillis: Long): Unit = {
+    val ctx = TaskContext.get()
+    val deadline = System.nanoTime() + maxMillis * 1000000L
+    while (!ctx.isInterrupted() && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+}
 
 class RegistrySpec extends SparkTestBase {
   import spark.implicits._
@@ -98,5 +117,88 @@ class RegistrySpec extends SparkTestBase {
     val n = big.rdd.getNumPartitions
     assert(n > 1 && n <= cap, s"expected (1, $cap] partitions, got $n")
     assert(big.count() === 200000L)
+  }
+
+  /** Runs `body` on a fresh thread and waits at most `seconds` for it.
+    * Returns its value or rethrows what it threw, fatal errors included;
+    * a body that hangs fails the calling test with a TimeoutException. */
+  private def bounded[A](seconds: Long)(body: => A): A = {
+    val out = new CompletableFuture[A]()
+    val t = new Thread(() => {
+      try out.complete(body) catch { case e: Throwable => out.completeExceptionally(e) }
+      ()
+    })
+    t.setDaemon(true)
+    t.start()
+    try out.get(seconds, TimeUnit.SECONDS)
+    catch { case e: ExecutionException => throw e.getCause }
+  }
+
+  /** The properties of every job started, and the result of every job
+    * ended, while `body` runs, once the listener bus has delivered them. */
+  private def jobsDuring(body: => Unit): (Seq[Properties], Seq[JobResult]) = {
+    val sc = spark.sparkContext
+    val started = new ConcurrentLinkedQueue[Properties]()
+    val ended = new ConcurrentLinkedQueue[JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.properties)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobResult)
+    }
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    (started.asScala.toSeq, ended.asScala.toSeq)
+  }
+
+  test("inParallel hands a thunk's fatal error to the caller instead of hanging") {
+    val err = intercept[StackOverflowError] {
+      bounded(30) {
+        Registry.inParallel(() => spark.range(10).count(),
+          () => throw new StackOverflowError("deep plan"))
+      }
+    }
+    assert(err.getMessage === "deep plan")
+  }
+
+  test("inParallel thunks' jobs carry the caller's job group and description") {
+    // Two calls from two threads with different labels: a pooled thread
+    // that kept the first call's properties would mislabel the second.
+    for (round <- Seq("first", "second")) {
+      val (jobs, _) = jobsDuring(bounded(120) {
+        spark.sparkContext.setJobGroup(s"group_$round", s"desc_$round")
+        Registry.inParallel(() => spark.range(10).count(), () => spark.range(20).count())
+      })
+      assert(jobs.nonEmpty)
+      jobs.foreach { p =>
+        assert(p.getProperty("spark.jobGroup.id") === s"group_$round")
+        assert(p.getProperty("spark.job.description") === s"desc_$round")
+      }
+    }
+  }
+
+  test("a failing inParallel thunk cancels the other thunks' running jobs") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val (jobs, results) = jobsDuring {
+      val err = intercept[IllegalStateException] {
+        bounded(45) {
+          Registry.inParallel(
+            // Runs for 60 s unless cancelled.
+            () => sc.parallelize(0 until 2, 2).foreach(_ => HoldUntilKilled(60000L)),
+            () => {
+              val deadline = System.nanoTime() + 30L * 1000000000L
+              while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < deadline)
+                Thread.sleep(20)
+              throw new IllegalStateException("sibling failed")
+            })
+        }
+      }
+      assert(err.getMessage === "sibling failed")
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 40, "the long job ran to its end")
+    assert(jobs.size === 1 && jobs.head.getProperty("spark.job.tags").split(",")
+      .exists(_.startsWith("graft-taskgraph-")), "the long job carries the call's tag")
+    assert(results.size === 1 && results.head.isInstanceOf[JobFailed],
+      s"the long job was not cancelled: $results")
   }
 }
