@@ -13,7 +13,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def registry: Seq[(String, Q)] =
+  private[graft] def registry: Seq[(String, Q)] =
     RelationalQueries.defs ++ WindowQueries.defs ++ PipelineQueries.defs ++
       SqlMartQueries.defs ++ LlmQueries.defs ++ StreamingQueries.defs ++
       GovernanceQueries.defs ++ TpchQueries.defs ++ TpcdsQueries.defs

@@ -1,6 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer training and application, Spark-first.
@@ -15,10 +17,13 @@ import org.apache.spark.sql.functions._
   *     map-side-combinable aggregate, the only stage that ever sees the
   *     full corpus. At 100 TB this is a single scan+shuffle of
   *     vocabulary-sized output (Heaps' law: |vocab| ≪ |corpus|).
-  *   - Every merge iteration then runs on the VOCAB frame (words as
-  *     symbol arrays, weighted by count): a pair census the size of
-  *     Σ|word| over distinct words, an argmax, and a codegen'd
-  *     higher-order-function rebuild. No iteration touches the corpus.
+  *   - Every merge iteration then runs on the VOCAB (words as symbol
+  *     arrays, weighted by count): a pair census the size of Σ|word|
+  *     over distinct words, an argmax, and a merge rebuild. No iteration
+  *     touches the corpus. A vocab of at most a fixed budget of words is
+  *     collected once and trained on the driver; a larger one runs each
+  *     iteration on the VOCAB frame (census aggregate, argmax, codegen'd
+  *     higher-order-function rebuild).
   *   - Applying the trained merges (encode) is again vocab-sized work
   *     broadcast-joined back to the token stream — the corpus never
   *     shuffles on anything wider than its own words.
@@ -69,39 +74,104 @@ object Bpe {
   final case class Merge(rank: Int, lhs: String, rhs: String,
                          merged: String, pairCount: Long)
 
+  /** Census rows [[trainMerges]] trains on by itself, on the driver.
+    * Measured in PLANS.md ("Driver-side finish"). */
+  private[llm] val LocalCensusBudget: Int = 1 << 20
+
   /** Train up to `k` merges over a (word, cnt) census. Returns the
     * merge table and the vocab frame with post-merge symbol arrays
     * (word, cnt, syms) — the trained tokenizer's working state.
     *
-    * Each iteration is one pair census over the vocab frame (posexplode
-    * + hash aggregate), one 1-row argmax via orderBy().limit(1) =
-    * TakeOrderedAndProject (per-partition heaps, never a global sort),
-    * and one fold rebuild. The vocab frame is localCheckpointed per
-    * iteration to truncate lineage (same discipline as the GD/Lloyd
-    * trainers). Stops early if no pair is left (every word fused). */
-  def trainMerges(words: DataFrame, k: Int): (Seq[Merge], DataFrame) = {
+    * A census of at most `budget` rows (read with one bounded collect,
+    * [[DriverSide]]) trains on the driver: k merge ranks in memory, then
+    * one vocab frame built from the result — instead of two scheduler
+    * jobs per rank. The driver keeps the distributed rules exactly:
+    * symbols are code points (as `substr`), ties go to the higher count,
+    * then the smaller `lhs`, then the smaller `rhs` in Spark's string
+    * order (code points, [[DriverSide.stringOrder]]), and each merge is
+    * [[applyMerge]]'s leftmost non-overlapping fold.
+    *
+    * A larger census runs the distributed loop: each iteration is one
+    * pair census over the vocab frame (posexplode + hash aggregate), one
+    * 1-row argmax via orderBy().limit(1) = TakeOrderedAndProject
+    * (per-partition heaps, never a global sort), and one fold rebuild.
+    * The vocab frame is localCheckpointed per iteration to truncate
+    * lineage (same discipline as the GD/Lloyd trainers).
+    *
+    * Both stop early if no pair is left (every word fused). `budget` is a
+    * parameter only so specs can force either path. */
+  def trainMerges(words: DataFrame, k: Int,
+      budget: Int = LocalCensusBudget): (Seq[Merge], DataFrame) = {
     var cur = words
       .select(col("word"), col("cnt"), charSymbols(col("word")).as("syms"))
       .localCheckpoint()
+    DriverSide.collectWithin(cur.select("word", "cnt"), budget) match {
+      case Some(census) => trainLocal(cur, census, k)
+      case None =>
+        val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+        var exhausted = false
+        for (rank <- 1 to k if !exhausted) {
+          val best = cur
+            .select(col("cnt"), col("syms"), posexplode(col("syms")).as(Seq("i", "l")))
+            .where(col("i") < size(col("syms")) - 1)
+            .select(col("cnt"), col("l"), element_at(col("syms"), col("i") + 2).as("r"))
+            .groupBy("l", "r").agg(sum("cnt").as("n"))
+            .orderBy(col("n").desc, col("l"), col("r")).limit(1)
+            .collect()
+          if (best.isEmpty) exhausted = true
+          else {
+            val (l, r, n) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+            merges += Merge(rank, l, r, l + r, n)
+            cur = cur.withColumn("syms", applyMerge(col("syms"), l, r))
+              .localCheckpoint()
+          }
+        }
+        (merges.toSeq, cur)
+    }
+  }
+
+  /** [[trainMerges]] on the driver over the collected census rows; `start`
+    * is the distributed loop's first vocab frame, whose schema (after one
+    * [[applyMerge]], if any merge fires) the result keeps. */
+  private def trainLocal(start: DataFrame, census: Array[Row],
+      k: Int): (Seq[Merge], DataFrame) = {
+    val cnts = census.map(r => if (r.isNullAt(1)) 0L else r.getAs[Number](1).longValue)
+    var syms: Array[Array[String]] = census.map(r =>
+      if (r.isNullAt(0)) null
+      else r.getString(0).codePoints.toArray.map(c => new String(Character.toChars(c))))
+    val best = Ordering.by[((String, String), Long), Long](p => -p._2)
+      .orElseBy(_._1._1)(DriverSide.stringOrder)
+      .orElseBy(_._1._2)(DriverSide.stringOrder)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var exhausted = false
     for (rank <- 1 to k if !exhausted) {
-      val best = cur
-        .select(col("cnt"), col("syms"), posexplode(col("syms")).as(Seq("i", "l")))
-        .where(col("i") < size(col("syms")) - 1)
-        .select(col("cnt"), col("l"), element_at(col("syms"), col("i") + 2).as("r"))
-        .groupBy("l", "r").agg(sum("cnt").as("n"))
-        .orderBy(col("n").desc, col("l"), col("r")).limit(1)
-        .collect()
-      if (best.isEmpty) exhausted = true
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (w <- syms.indices if syms(w) != null; i <- 0 until syms(w).length - 1) {
+        val p = (syms(w)(i), syms(w)(i + 1))
+        pairs(p) = pairs.getOrElse(p, 0L) + cnts(w)
+      }
+      if (pairs.isEmpty) exhausted = true
       else {
-        val (l, r, n) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        val ((l, r), n) = pairs.min(best)
         merges += Merge(rank, l, r, l + r, n)
-        cur = cur.withColumn("syms", applyMerge(col("syms"), l, r))
-          .localCheckpoint()
+        syms = syms.map(s => if (s == null) null else mergeLocal(s, l, r))
       }
     }
-    (merges.toSeq, cur)
+    val schema = merges.headOption.fold(start.schema)(m =>
+      start.withColumn("syms", applyMerge(col("syms"), m.lhs, m.rhs)).schema)
+    val rows = census.indices.map(i =>
+      Row(census(i).get(0), census(i).get(1), Option(syms(i)).map(_.toSeq).orNull))
+    (merges.toSeq, start.sparkSession.createDataFrame(rows.asJava, schema))
+  }
+
+  /** [[applyMerge]]'s fold on the driver. */
+  private def mergeLocal(syms: Array[String], lhs: String, rhs: String): Array[String] = {
+    val acc = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (s <- syms) {
+      if (acc.nonEmpty && acc.last == lhs && s == rhs) acc(acc.length - 1) = lhs + rhs
+      else acc += s
+    }
+    acc.toArray
   }
 
   /** Encode the corpus with a trained vocab frame: per-document word and

@@ -1,7 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH
   * (banded), SimHash, and n-gram Jaccard verification.
@@ -14,7 +17,10 @@ import org.apache.spark.sql.functions._
   *   - Candidate generation is the classic banded-LSH bucket join: docs
   *     only meet inside a (band, band_hash) bucket, never all-pairs.
   *   - Jaccard verification runs only on LSH candidate pairs.
-  * No collect() anywhere; every step is a DataFrame the optimizer can see.
+  * Every step is a DataFrame the optimizer can see. The one exception is
+  * [[connectedComponents]]: it collects its edge frame when it fits a
+  * fixed budget, and finishes on the driver ([[DriverSide]]; the collect
+  * is bounded, never whole-frame).
   */
 object Dedup {
 
@@ -401,36 +407,57 @@ object Dedup {
     train.join(contaminated, Seq(idCol), "left_anti")
   }
 
+  /** Symmetrised edge rows that [[connectedComponents]] finishes with a
+    * driver-side union-find instead of rounds. Measured in PLANS.md
+    * ("Driver-side finish"). */
+  private[llm] val LocalEdgeBudget: Int = 1 << 20
+
   /** Connected components of an undirected edge list — the final dedup
     * stage: LSH/verified near-dup PAIRS become duplicate CLUSTERS, from
     * which one canonical document per cluster survives. Returns one row
     * per vertex: (`id`, `component`) where `component` is the minimum
     * vertex id reachable from `id` (so the canonical doc of a cluster is
-    * the one with `id == component`).
+    * the one with `id == component`). A NULL endpoint links nothing: its
+    * partner is still a vertex, and no row has a NULL id.
     *
-    * Algorithm: iterative min-label propagation WITH pointer jumping.
+    * Small graphs finish on the driver. The symmetrised edge frame is
+    * collected with at most `budget + 1` rows ([[DriverSide]]); if it
+    * fits, a union-find whose root is the smallest id labels every vertex
+    * with the same component minimum the rounds compute, and no round
+    * runs. Ids must be LONG, INT or STRING for a driver-side finish (the
+    * union-find needs Spark's order); other types always take the rounds.
+    *
+    * Otherwise: iterative min-label propagation WITH pointer jumping.
     * Each round folds the minimum neighbor label into each vertex (one
     * edge×labels equi-join + one MIN aggregate, both with map-side
     * partial aggregation, no row explosion), then shortcuts through the
     * previous round's mapping (`label(label(v))` — the path-doubling
     * idea behind Kiveris et al.'s "Connected Components in MapReduce
-    * and Beyond"), so convergence is O(log diameter) rounds rather than
-    * O(diameter). Labels only ever decrease, so the fixpoint test
-    * (`any label changed?`) is exact. Near-clique LSH dup graphs finish
-    * in 2-3 rounds; threshold-similarity graphs with real chains
-    * (measured diameter ~16 on the sf0.1 embedding near-dup graph)
-    * finish in ~5 instead of ~16. Each new label frame is
-    * `localCheckpoint`ed: iterative
+    * and Beyond", SoCC 2014), so a chain whose ids run in order
+    * converges in O(log diameter) rounds rather than O(diameter); a
+    * chain of shuffled ids gains less from the jump. After every label
+    * frame, one probe asks whether any label was lowered; a frame that
+    * lowered none is the fixpoint (labels only ever take ids from the
+    * same component and the smallest vertex always keeps its own id, so
+    * a component with one label is labelled with its minimum). If
+    * `maxIter` label frames run out while labels were still lowering,
+    * the edges whose labels still differ are counted, and any left makes
+    * this throw with that count rather than return labels that are not
+    * minima.
+    * Each new label frame is `localCheckpoint`ed: iterative
     * self-referencing DataFrames otherwise grow a logical plan that
     * doubles per round — analysis time, not data, becomes the
     * bottleneck. The checkpoint truncates lineage to the materialized
-    * blocks, keeping every iteration's plan constant-size.
+    * blocks, keeping every iteration's plan constant-size. `budget` is a
+    * parameter only so specs can force either path.
     *
     * Reference behavior anchor: the migration suite dedups claim rows
     * exactly (`data_quality_checks.py:71-94`); clustering generalizes
     * that to the near-dup graph the LSH pipeline produces. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20): DataFrame = {
+      maxIter: Int = 20, budget: Int = LocalEdgeBudget): DataFrame = {
+    require(maxIter >= 1, s"maxIter=$maxIter must be >= 1")
+    val spark = pairs.sparkSession
     // Symmetrize with ONE consumer of `pairs`: the old
     // select(a,b).union(select(b,a)) spelling gave the pairs frame two
     // consumers, so the ENTIRE candidate-generation lineage (LSH chain /
@@ -443,23 +470,17 @@ object Dedup {
     // partitioning, so the (large) edge side never re-exchanges inside
     // the loop — only the small label frame moves each round (guide
     // §2.4 "two operations keyed the same way can share one exchange").
+    // The cache also serves the driver-side collect, so a graph too big
+    // for it does not run the candidate lineage a second time.
     val edges = pairs
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
+      .where(col("e.src").isNotNull)
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .repartition(col("src"))
       .persist()
-    // Labels stay localCheckpoint'ed per round: the checkpoint forgets
-    // output partitioning (so the label-side joins re-exchange — this
-    // round's Scratch experiment re-confirmed Spark 4.1 localCheckpoint
-    // drops outputPartitioning), but it is the only lineage CUT — a
-    // persist()-based variant was tried in r14 and OOM'd the driver,
-    // because the fold+jump steps reference the previous labels twice
-    // and an InMemoryRelation keeps its child plan, so the logical tree
-    // doubles per round exactly as the original design note warned.
-    //
     // Round 0 is FUSED into the initialization (r15): from identity
     // labels, one fold round computes exactly least(v, min(neighbors)),
     // which is a single aggregation over the pre-partitioned edge
@@ -468,58 +489,126 @@ object Dedup {
     // identity labels) plus a full fold round (join + agg + checkpoint
     // + fixpoint probe, ~9 scheduler jobs) to reach the same frame.
     // `changed` = a neighbor was smaller; vertices all of whose
-    // neighbors are larger keep their own id unchanged.
-    var labels = edges
+    // neighbors are larger keep their own id unchanged. The driver-side
+    // result takes its (id, component) schema, so both paths return the
+    // same one.
+    val initial = edges
       .groupBy(col("src").as("id")).agg(min(col("dst")).as("_nbr"))
       .select(col("id"),
         least(col("id"), col("_nbr")).as("component"),
         (col("_nbr") < col("id")).as("changed"))
-      .localCheckpoint(true)
-    var it = 1
-    var converged = labels.filter(col("changed")).isEmpty
-    while (!converged && it < maxIter) {
-      // Min label among each vertex's neighbors, folded into its own.
-      val nbrMin = edges
-        .join(labels.select(col("id").as("src"), col("component").as("c")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("c")).as("nbr_min"))
-      // Two label-lowering steps per round, then ONE eager
-      // materialization: (1) neighbor-min fold; (2) a pointer jump —
-      // replace the folded label with ITS label from the previous
-      // round (label(label(v)), the path-doubling shortcut of Kiveris
-      // et al.). The jump table is the already-materialized previous
-      // cache, so it costs one small exchange and zero recompute.
-      // Two rejected-after-measurement variants from this round, kept
-      // here so they are not retried: (a) jumping through the current
-      // FOLDED mapping (a self-join) — AQE broadcasts the jump side,
-      // a BroadcastExchange cannot reuse the fold's ShuffleExchange,
-      // and the whole nbrMin⋈fold subtree executed twice
-      // (llm_dedup_clusters CPU 4.95→7.64 s); (b) TWO chained
-      // prev-jumps — the measured round count did NOT drop (the
-      // min-label dynamics on these graphs are not jump-bound) and the
-      // extra join raised per-round CPU ~30%. Both steps only ever
-      // lower labels (least(...)), so monotonicity — and the exactness
-      // of the fixpoint test — is preserved.
-      val folded = labels.alias("l")
-        .join(nbrMin.alias("n"), Seq("id"), "left")
-        .select(col("id"), col("l.component").as("_prev"),
-          least(col("l.component"),
-            coalesce(col("n.nbr_min"), col("l.component"))).as("_c1"))
-      val lowered = folded
-        .join(labels.select(col("id").as("_jid"), col("component").as("_jc")),
-          col("_c1") === col("_jid"), "left")
-        .select(col("id"), col("_prev"),
-          least(col("_c1"), coalesce(col("_jc"), col("_c1"))).as("_c2"))
-      val next = lowered
-        .select(col("id"), col("_c2").as("component"),
-          (col("_c2") < col("_prev")).as("changed"))
-        .localCheckpoint(true)
-      converged = next.filter(col("changed")).isEmpty
-      labels.unpersist()
-      labels = next
-      it += 1
+    val schema = StructType(initial.schema.take(2))
+    val order = minOrder(schema("id").dataType)
+    try DriverSide.collectWithin(edges, if (order.isDefined) budget else 0) match {
+      case Some(rows) =>
+        // order is None only for an empty edge frame: nothing to compare.
+        val uf = new MinUnionFind(order.orNull)
+        // find() adds a vertex whose only partner is NULL as a singleton.
+        rows.foreach(r => if (r.isNullAt(1)) uf.find(r.get(0)) else uf.union(r.get(0), r.get(1)))
+        spark.createDataFrame(uf.roots.map { case (v, c) => Row(v, c) }.asJava, schema)
+      case None =>
+        // Labels stay localCheckpoint'ed per round: the checkpoint
+        // forgets output partitioning (so the label-side joins
+        // re-exchange — Spark 4.1 localCheckpoint drops
+        // outputPartitioning), but it is the only lineage CUT — a
+        // persist()-based variant was tried in r14 and OOM'd the
+        // driver, because the fold+jump steps reference the previous
+        // labels twice and an InMemoryRelation keeps its child plan, so
+        // the logical tree doubles per round exactly as the original
+        // design note warned.
+        var labels = initial.localCheckpoint(true)
+        var it = 1
+        var converged = labels.filter(col("changed")).isEmpty
+        while (!converged && it < maxIter) {
+          // Min label among each vertex's neighbors, folded into its own.
+          val nbrMin = edges
+            .join(labels.select(col("id").as("src"), col("component").as("c")), "src")
+            .groupBy(col("dst").as("id")).agg(min(col("c")).as("nbr_min"))
+          // Two label-lowering steps per round, then ONE eager
+          // materialization: (1) neighbor-min fold; (2) a pointer jump —
+          // replace the folded label with ITS label from the previous
+          // round (label(label(v)), the path-doubling shortcut of Kiveris
+          // et al.). The jump table is the already-materialized previous
+          // cache, so it costs one small exchange and zero recompute.
+          // Two rejected-after-measurement variants from this round, kept
+          // here so they are not retried: (a) jumping through the current
+          // FOLDED mapping (a self-join) — AQE broadcasts the jump side,
+          // a BroadcastExchange cannot reuse the fold's ShuffleExchange,
+          // and the whole nbrMin⋈fold subtree executed twice
+          // (llm_dedup_clusters CPU 4.95→7.64 s); (b) TWO chained
+          // prev-jumps — the measured round count did NOT drop (the
+          // min-label dynamics on these graphs are not jump-bound) and the
+          // extra join raised per-round CPU ~30%. Both steps only ever
+          // lower labels (least(...)), so monotonicity — and the exactness
+          // of the fixpoint test — is preserved.
+          val folded = labels.alias("l")
+            .join(nbrMin.alias("n"), Seq("id"), "left")
+            .select(col("id"), col("l.component").as("_prev"),
+              least(col("l.component"),
+                coalesce(col("n.nbr_min"), col("l.component"))).as("_c1"))
+          val lowered = folded
+            .join(labels.select(col("id").as("_jid"), col("component").as("_jc")),
+              col("_c1") === col("_jid"), "left")
+            .select(col("id"), col("_prev"),
+              least(col("_c1"), coalesce(col("_jc"), col("_c1"))).as("_c2"))
+          val next = lowered
+            .select(col("id"), col("_c2").as("component"),
+              (col("_c2") < col("_prev")).as("changed"))
+            .localCheckpoint(true)
+          converged = next.filter(col("changed")).isEmpty
+          labels.unpersist()
+          labels = next
+          it += 1
+        }
+        if (!converged) {
+          // The last frame still lowered labels, which may or may not
+          // have been the final lowering: count the edges whose labels
+          // still differ.
+          val active = edges
+            .join(labels.select(col("id").as("src"), col("component").as("_ls")), "src")
+            .join(labels.select(col("id").as("dst"), col("component").as("_ld")), "dst")
+            .where(col("_ls") < col("_ld"))
+            .count()
+          if (active > 0) throw new IllegalStateException(s"connectedComponents did not " +
+            s"converge in maxIter=$maxIter label rounds: $active active edges remain")
+        }
+        labels.select("id", "component")
+    } finally edges.unpersist()
+  }
+
+  /** Spark's order on the id types a driver-side finish supports. */
+  private def minOrder(t: DataType): Option[Ordering[Any]] = (t match {
+    case LongType => Some(Ordering.Long)
+    case IntegerType => Some(Ordering.Int)
+    case StringType => Some(DriverSide.stringOrder)
+    case _ => None
+  }).map(_.asInstanceOf[Ordering[Any]])
+
+  /** Union-find whose root is the smallest member under `order` — the
+    * component minimum the min-label rounds converge to. */
+  private final class MinUnionFind(order: Ordering[Any]) {
+    private val parent = new java.util.HashMap[Any, Any]
+    def find(v: Any): Any = {
+      parent.putIfAbsent(v, v)
+      var root = v
+      while (parent.get(root) != root) root = parent.get(root)
+      var cur = v
+      while (cur != root) {
+        val next = parent.get(cur)
+        parent.put(cur, root)
+        cur = next
+      }
+      root
     }
-    edges.unpersist()
-    labels.select("id", "component")
+    def union(a: Any, b: Any): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (order.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    /** Every member with its root. */
+    def roots: Seq[(Any, Any)] =
+      parent.keySet.asScala.toSeq.map(v => v -> find(v))
   }
 
   /** Cluster assignment for EVERY document (singletons keep their own id

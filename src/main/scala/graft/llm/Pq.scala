@@ -143,6 +143,8 @@ object Pq {
       .select(Similarity.asDoubleVec(col(vecCol)).as("vv"))
       .collect().map(_.getSeq[Double](0).toIndexedSeq)
     require(initRows.nonEmpty, "Pq.codebooks: empty training corpus")
+    require(initRows.length == k, s"Pq.codebooks: k=$k centroids need at least $k " +
+      s"training rows, got ${initRows.length}")
     initRows.foreach(v => require(v.size == m * subDim,
       s"Pq: expected dim ${m * subDim} but init vector has ${v.size} elements"))
     // cid = rank of the vector's id among the k smallest (the collect

@@ -4184,61 +4184,6 @@ object LlmQueries {
            |ORDER BY round""".stripMargin
       })),
 
-    "llm_bpe_encode" -> Q((s, dir) => {
-      // BPE ENCODING (TextOps.bpeEncode): learn 3 merge rules on the
-      // corpus (bpeMerges — rules are driver-side model state like GD
-      // weights), then encode every token through the ordered replace
-      // chain in ONE zero-shuffle projection. Gate pins per-doc subword
-      // counts, fertility, compression, and a 12-subword preview; the
-      // oracle replays the learning loop AND the encode.
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      val rules = TextOps.bpeMerges(docs.select("text"), rounds = 3)
-        .orderBy("round").collect().map(_.getString(1)).toSeq
-      TextOps.bpeEncode(docs, "doc_id", "text", rules).orderBy("doc_id")
-    },
-      Some({
-        def roundCtes(t: Int) =
-          s"""pc$t AS (SELECT p AS pair, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-             |    SELECT unnest(list_transform(range(1, len(a) - 1 + 1),
-             |        i -> a[i] || ' ' || a[i + 1])) AS p, freq
-             |    FROM (SELECT string_split(symstr, '  ') AS a, freq FROM w${t - 1})
-             |    WHERE len(a) >= 2)
-             |  GROUP BY p),
-             |top$t AS (SELECT pair, cnt FROM pc$t ORDER BY cnt DESC, pair LIMIT 1),
-             |w$t AS (SELECT trim(replace(' ' || symstr || ' ',
-             |    ' ' || replace((SELECT pair FROM top$t), ' ', '  ') || ' ',
-             |    ' ' || replace((SELECT pair FROM top$t), ' ', '') || ' ')) AS symstr, freq
-             |  FROM w${t - 1})""".stripMargin
-        s"""WITH $toksCte,
-           |wrd AS (SELECT unnest(t) AS w FROM toks),
-           |wf AS (SELECT w, count(*) AS freq FROM wrd WHERE length(w) >= 2 GROUP BY w),
-           |w0 AS (SELECT array_to_string(list_transform(range(1, length(w) + 1),
-           |    i -> substr(w, i, 1)), '  ') AS symstr, freq FROM wf),
-           |${Seq(1, 2, 3).map(roundCtes).mkString(",\n")},
-           |rules AS (SELECT (SELECT pair FROM top1) AS r1,
-           |    (SELECT pair FROM top2) AS r2, (SELECT pair FROM top3) AS r3),
-           |enc AS (SELECT doc_id, t,
-           |    list_transform(t, w ->
-           |      string_split(trim(replace(replace(replace(
-           |        ' ' || array_to_string(list_transform(range(1, length(w) + 1),
-           |            i -> substr(w, i, 1)), '  ') || ' ',
-           |        ' ' || replace(r1, ' ', '  ') || ' ', ' ' || replace(r1, ' ', '') || ' '),
-           |        ' ' || replace(r2, ' ', '  ') || ' ', ' ' || replace(r2, ' ', '') || ' '),
-           |        ' ' || replace(r3, ' ', '  ') || ' ', ' ' || replace(r3, ' ', '') || ' ')),
-           |      '  ')) AS sw
-           |  FROM toks CROSS JOIN rules)
-           |SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-           |  CAST(list_sum(list_transform(t, w -> length(w))) AS BIGINT) AS n_chars,
-           |  CAST(list_sum(list_transform(sw, s -> len(s))) AS BIGINT) AS n_subwords,
-           |  CASE WHEN len(t) > 0 THEN CAST(list_sum(list_transform(sw, s -> len(s))) AS DOUBLE)
-           |    / CAST(len(t) AS DOUBLE) END AS fertility,
-           |  CASE WHEN list_sum(list_transform(sw, s -> len(s))) > 0
-           |    THEN CAST(list_sum(list_transform(t, w -> length(w))) AS DOUBLE)
-           |    / CAST(list_sum(list_transform(sw, s -> len(s))) AS DOUBLE) END AS chars_per_subword,
-           |  array_to_string(flatten(sw)[1:12], ' ') AS subword_preview
-           |FROM enc ORDER BY doc_id""".stripMargin
-      })),
-
     "llm_zipf_slope" -> Q((s, dir) =>
       // Zipf rank-frequency fit over the top-1000 terms
       // (TextOps.zipfSlope): exact ranks, fixed-point regression

@@ -1,7 +1,9 @@
 package graft.tools
 
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.graftbus.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -10,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   * each registry gate once under the bench's count() convention (after
   * one untimed warm-up) with a SparkListener attached and prints one
   * JSON line per query with job/stage/task counts, total shuffle
-  * write/read bytes and records, and summed executor CPU time.
+  * write/read bytes and records, and summed executor CPU time;
+  * `counts_complete` is false when the listener bus did not drain in
+  * time, so the counts may be short.
   *
   * Purpose: this sandbox's wall-clock is contended (probe spread up to
   * 2x within one session — see OPTIMIZATION_r14.md), so before/after
@@ -74,9 +78,10 @@ object QueryMetrics {
       // The listener bus is async: drain it (bounded) before reading the
       // counters. A fixed sleep was a race — under load, late task-end
       // events were lost and the counters undercounted (r14 ADVICE).
-      org.apache.spark.graftbus.ListenerBusDrain.drain(spark.sparkContext)
+      val complete = drained(ListenerBusDrain.drain(spark.sparkContext))
       spark.sparkContext.removeSparkListener(listener)
-      println(f"""{"q":"$name","wall":$wall%.3f,"jobs":${jobs.get},""" +
+      println(f"""{"q":"$name","wall":$wall%.3f,"counts_complete":$complete,""" +
+        f""""jobs":${jobs.get},""" +
         f""""stages":${stages.get},"tasks":${tasks.get},""" +
         f""""cpu_sec":${cpuNs.get / 1e9}%.3f,"run_sec":${runMs.get / 1e3}%.3f,""" +
         f""""shuf_w_mb":${shufWB.get / 1e6}%.3f,"shuf_w_rec":${shufWRec.get},""" +
@@ -84,4 +89,10 @@ object QueryMetrics {
     }
     spark.stop()
   }
+
+  /** Runs a listener-bus drain; false when it times out. A bus that does
+    * not drain in time must not end the run: the line is still printed,
+    * with `counts_complete` false. */
+  private[tools] def drained(drain: => Unit): Boolean =
+    try { drain; true } catch { case _: TimeoutException => false }
 }

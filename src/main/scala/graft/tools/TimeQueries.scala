@@ -55,13 +55,18 @@ object TimeQueries {
       name -> median(runs)
     }
     val probeEnd = try { probe() } catch { case _: Throwable => -1.0 }
-    // One PURE JSON line: the probe values ride inside the object
-    // (underscore-prefixed so they cannot collide with a gate name) —
-    // appending `key=value` text after the closing brace broke any
-    // consumer that parsed the stdout line as JSON (r14 ADVICE).
-    println(timed.map { case (n, s) => f""""$n":$s%.3f""" }
-      .mkString("{", ",", ",") +
-      f""""_probe_start":$probeStart%.3f,"_probe_end":$probeEnd%.3f}""")
+    println(json(timed, probeStart, probeEnd))
     spark.stop()
   }
+
+  /** One PURE JSON line: the probe values ride inside the object
+    * (underscore-prefixed so they cannot collide with a gate name) —
+    * appending `key=value` text after the closing brace broke any
+    * consumer that parsed the stdout line as JSON (r14 ADVICE). One
+    * fragment list joined once, so no gate matching is still an object. */
+  private[tools] def json(timed: Seq[(String, Double)], probeStart: Double,
+      probeEnd: Double): String =
+    (timed.map { case (n, s) => f""""$n":$s%.3f""" } ++
+      Seq(f""""_probe_start":$probeStart%.3f""", f""""_probe_end":$probeEnd%.3f"""))
+      .mkString("{", ",", "}")
 }

@@ -233,4 +233,11 @@ class PqSpec extends SparkTestBase {
     }
     assert(ex.getMessage != null)
   }
+
+  test("codebooks: fewer training rows than k fails with a clear message") {
+    val ex = intercept[IllegalArgumentException] {
+      Pq.codebooks(vecs.limit(2), "vec_id", "embedding", m, subDim, k = 3, iters = 1)
+    }
+    assert(ex.getMessage.contains("k=3 centroids need at least 3 training rows, got 2"))
+  }
 }

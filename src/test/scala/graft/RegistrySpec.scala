@@ -201,4 +201,11 @@ class RegistrySpec extends SparkTestBase {
     assert(results.size === 1 && results.head.isInstanceOf[JobFailed],
       s"the long job was not cancelled: $results")
   }
+
+  test("SparkEntry registers each gate name once") {
+    // queries/oracleSql keep the LAST entry of a repeated name (toMap),
+    // so an earlier one would be dead code that no gate check runs.
+    val dups = SparkEntry.registry.groupBy(_._1).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"gate names registered twice: ${dups.mkString(", ")}")
+  }
 }
